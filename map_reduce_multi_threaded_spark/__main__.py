@@ -18,6 +18,13 @@ import sys
 import time
 
 
+def _positive_int(value: str) -> int:
+    n = int(value)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(
         prog="python -m map_reduce_multi_threaded_spark",
@@ -28,24 +35,26 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("text_dir", help="directory of raw text files (the reference's ./RawText)")
     parser.add_argument("--out", required=True, help="output directory for the counted text files")
     parser.add_argument(
-        "--passes", type=int, default=1,
+        "--passes", type=_positive_int, default=1,
         help="replay the corpus N times (reference LOOP_OVER_DIRECTORY=8; counts scale xN)",
     )
     parser.add_argument(
-        "--processes", type=int, default=2,
+        "--processes", type=_positive_int, default=2,
         help="number of output files, one per hash partition (= the reference's MPI world size)",
     )
     args = parser.parse_args(argv)
 
     from .operators.wordcount import word_counts_from_text_dir
+    from .plans.metrics import observe_rows
     from .session import get_spark
     from .sources.sinks import write_reference_format
 
     t0 = time.time()
     spark = get_spark(app_name="map-reduce-multi-threaded-spark-cli")
     counts = word_counts_from_text_dir(spark, args.text_dir, passes=args.passes, sort=False)
+    counts, obs = observe_rows(counts)
     write_reference_format(counts, args.out, num_files=args.processes)
-    n_words = spark.read.text(args.out).count()
+    n_words = obs.get["rows"]
     print(
         f"wrote {n_words} '<word, count> ' lines across {args.processes} "
         f"files to {args.out} in {time.time() - t0:.3f}s "

@@ -10,14 +10,17 @@
 
 from __future__ import annotations
 
+import random
 import re
 import string
 from collections import Counter
 
 import duckdb
 import pyspark.sql.functions as F
+import pytest
 
 from map_reduce_multi_threaded_spark.operators import wordcount
+from map_reduce_multi_threaded_spark.sources.text import tokens_from_text
 from tests.oracle_utils import compare
 
 
@@ -115,53 +118,101 @@ def test_oracle_wordcount(spark, sf_oracle_dir):
         compare(spec.fn(spark, sf_oracle_dir), spec.oracle, sf_oracle_dir)
 
 
+def _engine_counts(spark, texts: list[str]) -> dict:
+    """The engine's own tokenize → count-raw → normalize path over
+    in-memory texts."""
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    toks = df.select(F.explode(tokens_from_text(F.col("text"))).alias("tok"))
+    rows = wordcount._normalized_counts(toks).collect()
+    assert all(r["word"] != "" and r["cnt"] is not None for r in rows), rows
+    return {r["word"]: r["cnt"] for r in rows}
+
+
 def test_tokenize_fuzz_vs_python_reference(spark):
     """Seeded fuzz over adversarial ASCII inputs (punct runs, mixed
-    whitespace, empty-after-strip tokens) — Spark's regex pipeline must
-    match the C-semantics reimplementation token for token.
+    whitespace, empty-after-strip tokens) — the engine's counting path
+    must match the C-semantics reimplementation token for token.
 
     Restricted to ASCII on purpose: the reference's ispunct/>> are
     ASCII-only, and Java's \\s (no UNICODE_CHARACTER_CLASS) is too,
     while Python's re \\s is unicode-aware — the engines only agree on
     the reference's actual input domain."""
-    import random
-    import string as s
-
     rng = random.Random(42)
-    alphabet = s.ascii_letters + s.digits + s.punctuation + " \t\n\r\x0b\x0c"
+    alphabet = string.ascii_letters + string.digits + string.punctuation + " \t\n\r\x0b\x0c"
     texts = [
         "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 80)))
         for _ in range(300)
     ] + ["", "   ", "---", "a--b", "don't stop", "\t\n", "!!!", "a" * 100]
-
-    expected = python_reference_counts(texts)
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    import pyspark.sql.functions as F
-
-    from map_reduce_multi_threaded_spark.functions.text import normalize_token
-
-    got = {
-        r["word"]: r["cnt"]
-        for r in df.select(F.explode(F.split("text", r"\s+")).alias("tok"))
-        .select(normalize_token(F.col("tok")).alias("word"))
-        .where(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert got == dict(expected)
+    assert _engine_counts(spark, texts) == dict(python_reference_counts(texts))
 
 
-def test_plan_shape(spark, sf_dir):
-    """The physical plan must be the reference's plan: partial
-    HashAggregate → Exchange hashpartitioning(word) → final
-    HashAggregate, all inside whole-stage codegen."""
-    plan = wordcount.word_counts(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan
-    assert "hashpartitioning" in plan or "Exchange" in plan
+def test_degenerate_corpora_yield_no_empty_word(spark, tmp_path):
+    """Corpora whose every token normalizes to "" (punctuation only),
+    that hold no token at all (whitespace only) or are empty files
+    must count nothing — no "" word, no null count — on both inputs."""
+    rng = random.Random(7)
+    punct = [
+        " ".join("".join(rng.choice(string.punctuation) for _ in range(rng.randint(1, 6)))
+                 for _ in range(rng.randint(1, 20)))
+        for _ in range(50)
+    ]
+    blank = ["", " ", "\t\n", "  \r\n\x0b\x0c  "]
+    for texts in (punct, blank, punct + blank):
+        assert _engine_counts(spark, texts) == {}
+
+    for name, texts in (("punct", punct), ("blank", blank), ("empty", [""] * 3)):
+        src = tmp_path / name
+        src.mkdir()
+        for i, t in enumerate(texts):
+            (src / f"doc_{i:03d}.txt").write_text(t)
+        for passes in (1, 8):
+            assert wordcount.word_counts_from_text_dir(
+                spark, str(src), passes=passes
+            ).collect() == []
 
 
-def test_cli_end_to_end(spark, sf_dir, tmp_path):
+def test_passes_below_one_rejected(spark, sf_dir, tmp_path):
+    """passes < 1 is a contract violation, not a silent single pass;
+    the CLI rejects it, and --processes < 1, at argument parsing."""
+    from map_reduce_multi_threaded_spark.__main__ import main
+
+    for n in (0, -3):
+        with pytest.raises(ValueError, match="passes must be >= 1"):
+            wordcount.words(spark, sf_dir, passes=n)
+        with pytest.raises(ValueError, match="passes must be >= 1"):
+            wordcount.word_counts(spark, sf_dir, passes=n)
+        with pytest.raises(ValueError, match="passes must be >= 1"):
+            wordcount.word_counts_from_text_dir(spark, str(tmp_path), passes=n)
+        for flag in ("--passes", "--processes"):
+            with pytest.raises(SystemExit):
+                main([str(tmp_path), "--out", str(tmp_path / "out"), flag, str(n)])
+
+
+def test_plan_shape(spark, sf_dir, tmp_path):
+    """normalize_token (regexp_replace + translate) must run on the
+    raw-token aggregate's output, once per distinct surface form — never
+    on the token stream below it.  Guards against Catalyst pushing the
+    drop-empty test through both aggregates onto explode(split(...)).
+    The initial (pre-AQE) executed plan holds the whole tree once."""
+    src = tmp_path / "RawText"
+    src.mkdir()
+    (src / "doc.txt").write_text("Alpha beta, ALPHA! -- gamma\n")
+    for passes in (1, 8):
+        for df in (
+            wordcount.word_counts(spark, sf_dir, passes=passes),
+            wordcount.word_counts_from_text_dir(spark, str(src), passes=passes),
+        ):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning(tok" in plan, plan
+            # the subtree below the lowest raw-token (partial) aggregate
+            lines = plan.splitlines()
+            lowest = max(i for i, ln in enumerate(lines) if "HashAggregate(keys=[tok" in ln)
+            below = "\n".join(lines[lowest + 1:])
+            assert "Generate explode(split(" in below, plan
+            assert "regexp_replace" not in below and "translate" not in below, plan
+
+
+def test_cli_end_to_end(spark, sf_dir, tmp_path, capsys):
     """python -m map_reduce_multi_threaded_spark <dir> --out <dir>:
     the full mpiexec-equivalent contract — raw text dir in, exactly
     --processes text files of sorted '<word, count> ' lines out,
@@ -192,6 +243,8 @@ def test_cli_end_to_end(spark, sf_dir, tmp_path):
     expected = python_reference_counts([ (src / f).read_text() for f in os.listdir(src) ], passes=8)
     expected_lines = sorted(f"<{w}, {c}> " for w, c in expected.items())
     assert sorted(lines) == expected_lines
+    # the printed line count is observed during the write itself
+    assert f"wrote {len(lines)} '<word, count> ' lines across 2 files" in capsys.readouterr().out
 
 
 def test_text_dir_reads_gzip_transparently(spark, tmp_path):
